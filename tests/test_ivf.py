@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def _emb(spark):
@@ -97,3 +97,18 @@ def test_ann_recall_floors(spark):
     assert mean["ivf_topk"] >= 0.3, mean
     # every (method, query) pair is present, hit counts bounded by k
     assert len(r) == 10 and (r["n_hit"] <= r["n_truth"]).all()
+
+
+def test_ann_recall_approx_pairs_unique(spark):
+    """ann_recall counts n_truth from a left join of the brute-force truth
+    against each method's approx list, so a repeated approx pair would
+    silently inflate n_truth: each list's (query_id, neighbor_id) pairs
+    must be unique."""
+    from uncharted_ta1_pipeline_spark.operators.similarity import ann_lsh, ivf_topk
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    for fn in (ann_lsh, ivf_topk):
+        pairs = fn(emb, n_queries=5, k=10).select("query_id", "neighbor_id").toPandas()
+        assert len(pairs) > 0, fn.__name__
+        dup = pairs[pairs.duplicated(keep=False)]
+        assert dup.empty, f"{fn.__name__} repeats (query_id, neighbor_id):\n{dup}"

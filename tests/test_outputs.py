@@ -1,5 +1,5 @@
-"""OutputCreator surface (plans/outputs.py), local data cache + broadcast
-dims (sources/cache.py), and the metrics table (plans/pipeline.py)."""
+"""OutputCreator surface (plans/outputs.py) and the metrics table
+(plans/pipeline.py)."""
 
 from __future__ import annotations
 
@@ -62,49 +62,6 @@ def test_output_kinds_roundtrip(spark, tmp_path):
     assert spark.read.option("header", True).csv(str(tmp_path / "tab")).count() == 200
     assert spark.read.json(str(tmp_path / "obj")).count() == 200
     assert spark.read.parquet(str(tmp_path / "mod")).count() == 200
-
-
-def test_local_data_cache(tmp_path):
-    """Producer runs exactly once per key; a second cache instance over the
-    same dir reuses the file (the per-host download-once semantic)."""
-    from uncharted_ta1_pipeline_spark.sources.cache import LocalDataCache
-
-    calls = []
-
-    def make():
-        calls.append(1)
-        return b"weights-v1"
-
-    c1 = LocalDataCache(str(tmp_path / "cache"))
-    p1 = c1.fetch("model://weights?v=1", make)
-    p2 = c1.fetch("model://weights?v=1", make)
-    assert p1 == p2 and len(calls) == 1
-    assert open(p1, "rb").read() == b"weights-v1"
-
-    c2 = LocalDataCache(str(tmp_path / "cache"))  # new process analog
-    assert c2.contains("model://weights?v=1")
-    c2.fetch("model://weights?v=1", make)
-    assert len(calls) == 1  # still one production
-
-    assert c1.fetch("model://other", make) != p1
-    assert len(calls) == 2
-
-
-def test_broadcast_dim_guard(spark):
-    """Small dims get the broadcast hint; an oversized dim is refused by a
-    bounded probe (no full count of the big side)."""
-    import pytest
-
-    from uncharted_ta1_pipeline_spark.sources.cache import broadcast_dim
-
-    t = _load(spark)
-    dim = t.select("conv_id").distinct()
-    hinted = broadcast_dim(dim, max_rows=10_000)
-    plan = t.join(hinted, on="conv_id")._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-    with pytest.raises(ValueError, match="broadcast_dim"):
-        broadcast_dim(t, max_rows=10)
 
 
 def test_metrics_table(spark, tmp_path):

@@ -44,39 +44,9 @@ def test_salted_on_synthetic_hot_conv(spark):
     _cmp(plain, salted)
 
 
-def test_hybrid_narrow_equals_plain(spark):
-    """The narrow path (text dropped before the windows, re-joined after)
-    is a physical strategy too: output equals featurize() exactly,
-    byte-identical text included."""
-    from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
-    from uncharted_ta1_pipeline_spark.operators.windows import featurize
-    from uncharted_ta1_pipeline_spark.sources.transcripts import load_transcripts
-
-    t = load_transcripts(spark, SF_SMOKE)
-    plain = featurize(t).toPandas()
-    narrow = featurize_hybrid(t, narrow=True).toPandas()
-    _cmp(plain, narrow)
-
-
-def test_hybrid_narrow_routes_hot_convs(spark):
-    """narrow + hot routing together (a hot conv above the threshold)."""
-    from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
-    from uncharted_ta1_pipeline_spark.operators.windows import featurize
-    from uncharted_ta1_pipeline_spark.sources.transcripts import synth_transcripts
-
-    t = synth_transcripts(
-        spark, n_convs=10, mean_turns=30, hot_convs=1, hot_turns=2000, seed=11
-    )
-    plain = featurize(t).toPandas()
-    hybrid = featurize_hybrid(
-        t, hot_threshold=1000, chunk_size=256, narrow=True
-    ).toPandas()
-    _cmp(plain, hybrid)
-
-
 def test_single_pass_routing_equals_plain(spark):
-    """The single-pass routed path (hot flag inside one salted pass — the
-    default) is frame-equal to featurize() in every routing regime: mixed
+    """The single-pass routed path (hot flag inside one salted pass) is
+    frame-equal to featurize() in every routing regime: mixed
     hot/cold, all-cold (empty hot dim), all-hot."""
     from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
     from uncharted_ta1_pipeline_spark.operators.windows import featurize
@@ -87,21 +57,18 @@ def test_single_pass_routing_equals_plain(spark):
     )
     plain = featurize(t).toPandas()
     for thr in (1000, 10**9, 1):  # mixed, all-cold, all-hot
-        routed = featurize_hybrid(
-            t, hot_threshold=thr, chunk_size=256, single_pass=True
-        ).toPandas()
+        routed = featurize_hybrid(t, hot_threshold=thr, chunk_size=256).toPandas()
         _cmp(plain, routed)
 
 
 def test_single_pass_scans_input_once(spark):
     """The routed plan reads the full-width input ONCE (plus the
-    column-pruned conv_id scan for the hot dim) — the branched path reads
-    it once per branch."""
+    column-pruned conv_id scan for the hot dim)."""
     from uncharted_ta1_pipeline_spark.operators.salt import featurize_hybrid
     from uncharted_ta1_pipeline_spark.sources.transcripts import load_transcripts
 
     t = load_transcripts(spark, SF_SMOKE)
-    plan = featurize_hybrid(t, single_pass=True)._jdf.queryExecution().executedPlan().toString()
+    plan = featurize_hybrid(t)._jdf.queryExecution().executedPlan().toString()
     # transcripts derive text from events.props (sources/transcripts.py), so a
     # full-width scan is one whose parquet ReadSchema includes props; column
     # pruning must confine props to exactly ONE scan (the offsets branch and

@@ -43,8 +43,6 @@ def featurize_hybrid(
     chunk_size: int = DEFAULT_CHUNK,
     rolling_width: int = 5,
     gap_s: int = 1800,
-    narrow: bool = False,
-    single_pass: bool = True,
 ) -> DataFrame:
     """Route conversations by size: the few above ``hot_threshold`` turns
     take the chunked/salted path; everything else takes the plain
@@ -53,37 +51,12 @@ def featurize_hybrid(
     image exceeds the pixel limit).  Same output as ``featurize`` for any
     routing.
 
-    ``single_pass`` (default): routing happens INSIDE one pass — rows carry
-    a broadcast hot flag and the salted machinery gives cold conversations
-    a constant chunk (no carries, no offsets), so the physical plan scans
-    the full-width input ONCE instead of once per branch.  ``False`` keeps
-    the two-branch union (2 full scans + an eager isEmpty()) for A/B.
-
-    ``narrow``: drop the ``text`` column — by far the widest, never an
-    input to any window function — BEFORE the window stages and join it
-    back by (conv_id, turn_idx) at the end, so window buffers hold only
-    the ~14 narrow feature columns.  Measured trade-off on this host
-    (12M-turn hybrid input, same-invocation A/B): wide 64.4s/26.1s vs
-    narrow 77.4s/32.1s at local[4]/local[16] — the re-join's extra
-    shuffle+sort of 12M text rows costs more than the narrower buffers
-    save, so the default is False; narrow scales slightly better
-    (0.72 vs 0.62 efficiency) and wins on window-dominated inputs
-    (small-conversation-only data measured 0.78 and fastest absolute at
-    16 cores), so it stays available per-call.  Exact same output either
-    way (asserted in tests/test_salt.py)."""
-    if narrow and "text" in df.columns:
-        feats = featurize_hybrid(
-            df.drop("text"),
-            hot_threshold=hot_threshold,
-            chunk_size=chunk_size,
-            rolling_width=rolling_width,
-            gap_s=gap_s,
-            narrow=False,
-            single_pass=single_pass,
-        )
-        return feats.join(
-            df.select("conv_id", "turn_idx", "text"), on=["conv_id", "turn_idx"]
-        )
+    Routing happens INSIDE one pass — rows carry a broadcast hot flag and
+    the salted machinery gives cold conversations a constant chunk (no
+    carries, no offsets), so the physical plan scans the full-width input
+    ONCE.  It won when measured: one full-width scan against three for a
+    two-branch hot/cold union, and 64.4 s against 77.4 s at local[4] for a
+    variant that dropped ``text`` before the windows and re-joined it."""
     from uncharted_ta1_pipeline_spark.operators.windows import featurize
 
     # Routing flag: the hot set is by construction tiny — at most
@@ -99,39 +72,24 @@ def featurize_hybrid(
     )
     # planning decision, evaluated eagerly like AQE's runtime stats: a tiny
     # aggregate-only action over a column-pruned scan, not a data collect —
-    # with no hot conversations BOTH strategies collapse to the plain
+    # with no hot conversations routing collapses to the plain
     # single-window path (1 full scan, no explode overhead)
     if hot.isEmpty():
         return featurize(df, rolling_width=rolling_width)
-    if single_pass:
-        # ONE full-width pass: cold conversations flow through the salted
-        # machinery with a constant chunk (≡ the plain per-conv window —
-        # same task shape, no carries), hot conversations get real chunks.
-        # Physical plan: 1 full-width scan (the output branch) + 1 narrow
-        # hot-only scan (chunk sums) + pruned conv_id scans for the dims —
-        # versus 3 full-input scans in the branched path.  At 100 TB the
-        # saved full-width passes dominate.
-        flagged = df.join(F.broadcast(hot), on="conv_id", how="left")
-        return featurize_salted(
-            flagged,
-            chunk_size=chunk_size,
-            rolling_width=rolling_width,
-            gap_s=gap_s,
-            hot_col="_hot",
-        )
-    # branched strategy (kept for A/B)
+    # ONE full-width pass: cold conversations flow through the salted
+    # machinery with a constant chunk (≡ the plain per-conv window —
+    # same task shape, no carries), hot conversations get real chunks.
+    # Physical plan: 1 full-width scan (the output branch) + 1 narrow
+    # hot-only scan (chunk sums) + pruned conv_id scans for the dims.
+    # At 100 TB the saved full-width passes dominate.
     flagged = df.join(F.broadcast(hot), on="conv_id", how="left")
-    cold_f = featurize(
-        flagged.filter(F.col("_hot").isNull()).drop("_hot"),
-        rolling_width=rolling_width,
-    )
-    hot_f = featurize_salted(
-        flagged.filter(F.col("_hot")).drop("_hot"),
+    return featurize_salted(
+        flagged,
         chunk_size=chunk_size,
         rolling_width=rolling_width,
         gap_s=gap_s,
+        hot_col="_hot",
     )
-    return cold_f.unionByName(hot_f.select(*cold_f.columns))
 
 
 def featurize_salted(
